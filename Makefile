@@ -1,5 +1,5 @@
 # Operator entry points. Python deps: pyspark 4.x, pyarrow, pandas,
-# numpy, duckdb, pytest (the test/verify targets), fastavro optional.
+# numpy, duckdb, pytest (the test/verify targets).
 
 PYTEST ?= python -m pytest
 

@@ -816,7 +816,6 @@ def minhash_anti_join_sketched(
     corpus_id_col: str = "id",
     new_sketch: DataFrame | None = None,
     collapse: bool | None = None,
-    materialize_dups: bool = True,
 ) -> DataFrame:
     """The INCREMENTAL crawl-ingest gate: :func:`minhash_anti_join`
     against a PRE-SKETCHED corpus — the 100 TB steady state, where the
@@ -841,12 +840,7 @@ def minhash_anti_join_sketched(
     side that carries an ``hset_fp`` column: None (default) probes
     per side, True/False forces — a corpus kept self-deduped by this
     very gate never needs it, so a persisted fp-less sketch table
-    skips the probe entirely. ``materialize_dups=False`` skips the
-    duplicate-id-set checkpoint barrier — r16 A/B-measured ~0.1 s
-    SLOWER at sf0.1 even for a single-consumer caller (the one
-    mega-plan under the broadcast anti-join schedules worse than two
-    materialized jobs), so the default stays True; the knob remains
-    for callers whose duplicate set is too big to checkpoint."""
+    skips the probe entirely."""
     for c in (corpus_id_col, "minhash", "hset"):
         if c not in corpus_sketch.columns:
             raise ValueError(
@@ -907,7 +901,6 @@ def minhash_anti_join_sketched(
             threshold,
             collapse_new=collapse,
             collapse_old=collapse,
-            materialize_dups=materialize_dups,
         )
     finally:
         if not caller_owns_sketch:
@@ -924,7 +917,6 @@ def _minhash_anti_join_core(
     threshold: float,
     collapse_new: bool | None = None,
     collapse_old: bool | None = None,
-    materialize_dups: bool = True,
 ) -> DataFrame:
     # exact-duplicate collapse per side (guide §2.5 skew handling; see
     # minhash_dup_pairs): clone clusters — e.g. a crawl batch carrying
@@ -1027,13 +1019,12 @@ def _minhash_anti_join_core(
             )
             .select(F.col("id").alias("new_id"))
         )
-    if materialize_dups:
-        # callers that consume the gated frame MORE THAN ONCE (the
-        # streaming committers: kept rows land in two commits; the
-        # incremental entry appends survivors AND unions them) re-run
-        # only this cheap anti-join against the materialized id set
-        # instead of the whole LSH pipeline per consumer
-        dup_ids = dup_ids.localCheckpoint(eager=True)
+    # callers that consume the gated frame MORE THAN ONCE (the
+    # streaming committers: kept rows land in two commits; the
+    # incremental entry appends survivors AND unions them) re-run
+    # only this cheap anti-join against the materialized id set
+    # instead of the whole LSH pipeline per consumer
+    dup_ids = dup_ids.localCheckpoint(eager=True)
     return new.join(
         dup_ids, new[id_col] == dup_ids["new_id"], "left_anti"
     )

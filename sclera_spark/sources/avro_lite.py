@@ -1,25 +1,22 @@
-"""Minimal pure-Python Apache Avro Object Container File reader.
+"""Minimal Apache Avro Object Container File reader.
 
 Implements exactly the PUBLIC Avro 1.x specification
 (https://avro.apache.org/docs/1.12.0/specification/ — file format:
 "Object Container Files"; encodings: "Binary Encoding"), enough to read
 Iceberg's manifest-list and manifest files (sources/iceberg.py) without
-a third-party codec. Reading uses the embedded WRITER schema and yields
-plain dicts for records — the same shape ``fastavro.reader`` yields —
-so the Iceberg replay code is byte-for-byte agnostic about which reader
-decoded it.
+a third-party Avro library. Reading uses the embedded WRITER schema and
+yields plain dicts for records — the same shape ``fastavro.reader``
+yields.
 
 Scope (deliberate):
 - decode-only; no writer (fixtures are generated with the Apache Avro
   JAVA library bundled in the Spark distribution — an independent,
   canonical encoder — see tests/test_iceberg_import.py).
-- codecs: the FULL Avro 1.12 matrix (r14) — ``null``, ``deflate``
-  (raw zlib), ``snappy`` (CRC32-verified; pyarrow's C decoder when the
-  build has it, else the bundled pure-Python raw-block decoder),
-  ``zstandard`` (pyarrow when available, else the bundled pure-Python
-  RFC 8878 decoder in sources/zstd_lite.py), ``bzip2`` and ``xz``
-  (Python stdlib, output-ceiling guarded). Unknown codec names refuse
-  loudly.
+- codecs: the FULL Avro 1.12 matrix — ``null``, ``deflate`` (raw
+  zlib), ``snappy`` (pyarrow's bundled snappy, CRC32-verified),
+  ``zstandard`` (pyarrow's bundled libzstd, streamed), ``bzip2`` and
+  ``xz`` (Python stdlib). Every codec decodes under one output ceiling
+  (``_MAX_INFLATE``); unknown codec names refuse loudly.
 - logical types are returned as their RAW underlying values (Iceberg's
   replay only touches strings/longs/ints, where raw == logical).
 
@@ -35,6 +32,8 @@ import json
 import struct
 import zlib
 from typing import Any, BinaryIO, Iterator
+
+import pyarrow as pa
 
 MAGIC = b"Obj\x01"
 
@@ -281,127 +280,51 @@ class _DatumReader:
 
 
 _MAX_INFLATE = 1 << 30  # 1 GiB per block: far past any real manifest
-
-
-def _snappy_decompress(data: bytes) -> bytes:
-    """Pure-Python snappy RAW-format decoder (the block format, not the
-    framing format) — implements the public format description
-    (github.com/google/snappy format_description.txt) exactly:
-    little-endian-varint uncompressed-length preamble, then a tag-byte
-    stream of literals and back-references. Back-references may overlap
-    their own output (offset < length copies bytes as they appear —
-    the format's RLE idiom). Used for Avro's ``snappy`` codec, the
-    most common encoding of Iceberg manifests in the wild; hostile
-    input refuses loudly (length bombs, out-of-range offsets,
-    truncation) instead of allocating its claim."""
-    pos = 0
-    n = len(data)
-    # preamble: PLAIN varint32 (no zig-zag), little-endian 7-bit groups
-    result_len = 0
-    shift = 0
-    while True:
-        if pos >= n:
-            raise AvroLiteError("avro: snappy preamble truncated")
-        b = data[pos]
-        pos += 1
-        result_len |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 31:
-            raise AvroLiteError("avro: snappy preamble varint overlong")
-    if result_len > _MAX_INFLATE:
-        raise AvroLiteError(
-            f"avro: snappy block claims {result_len} uncompressed bytes "
-            f"(cap {_MAX_INFLATE}) — refusing a corrupt or hostile "
-            "container"
-        )
-    out = bytearray()
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        ttype = tag & 3
-        if ttype == 0:  # literal
-            ln = (tag >> 2) + 1
-            if ln > 60:
-                nb = ln - 60  # 1-4 length bytes, little-endian
-                if pos + nb > n:
-                    raise AvroLiteError("avro: snappy literal-length truncated")
-                ln = int.from_bytes(data[pos : pos + nb], "little") + 1
-                pos += nb
-            if pos + ln > n:
-                raise AvroLiteError("avro: snappy literal truncated")
-            out += data[pos : pos + ln]
-            pos += ln
-        else:
-            if ttype == 1:  # copy, 1-byte offset: len 4-11, off 11 bits
-                ln = 4 + ((tag >> 2) & 0x7)
-                if pos >= n:
-                    raise AvroLiteError("avro: snappy copy offset truncated")
-                off = ((tag >> 5) << 8) | data[pos]
-                pos += 1
-            elif ttype == 2:  # copy, 2-byte little-endian offset
-                ln = (tag >> 2) + 1
-                if pos + 2 > n:
-                    raise AvroLiteError("avro: snappy copy offset truncated")
-                off = int.from_bytes(data[pos : pos + 2], "little")
-                pos += 2
-            else:  # copy, 4-byte little-endian offset
-                ln = (tag >> 2) + 1
-                if pos + 4 > n:
-                    raise AvroLiteError("avro: snappy copy offset truncated")
-                off = int.from_bytes(data[pos : pos + 4], "little")
-                pos += 4
-            if off == 0 or off > len(out):
-                raise AvroLiteError(
-                    "avro: snappy copy offset out of range (corrupt block)"
-                )
-            start = len(out) - off
-            if off >= ln:  # non-overlapping: one slice
-                out += out[start : start + ln]
-            else:  # overlapping: byte-wise (the spec's RLE semantics)
-                for i in range(ln):
-                    out.append(out[start + i])
-        if len(out) > result_len:
-            raise AvroLiteError(
-                "avro: snappy output exceeds its preamble length "
-                "(corrupt block)"
-            )
-    if len(out) != result_len:
-        raise AvroLiteError(
-            f"avro: snappy block decoded to {len(out)} bytes but its "
-            f"preamble claims {result_len} (corrupt block)"
-        )
-    return bytes(out)
-
-
-def _pa_codec(name: str):
-    """pyarrow's bundled codec when available (the FAST path — C-level
-    snappy/zstd; pyarrow is a hard dependency of this engine, but its
-    codec set is build-dependent, so availability is probed and the
-    pure-Python spec decoders below remain the fallback)."""
-    try:
-        import pyarrow as pa
-
-        if pa.Codec.is_available(name):
-            return pa.Codec(name)
-    except Exception:
-        pass
-    return None
+_ZSTD_READ_CHUNK = 1 << 20
 
 
 def _snappy_preamble_length(data: bytes) -> int | None:
     """The snappy raw-format preamble (plain little-endian varint32):
-    the declared uncompressed length, or None if malformed — used to
-    hand pyarrow's C decoder its required decompressed_size."""
+    the declared uncompressed length, or None if truncated or longer
+    than 5 bytes — pyarrow's decoder needs it as decompressed_size."""
     n = 0
     shift = 0
-    for i, b in enumerate(data[:5]):
+    for b in data[:5]:
         n |= (b & 0x7F) << shift
         if not b & 0x80:
             return n
         shift += 7
     return None
+
+
+def _zstd_decompress(block: bytes) -> bytes:
+    """One Avro ``zstandard`` block through pyarrow's libzstd stream.
+    The streaming decoder is required, not a one-shot call: Avro
+    Java's codec writes frames WITHOUT a content size, so the output
+    length is only known by decoding. Output is read in bounded chunks
+    and refused once it passes the inflate cap, so a bomb never
+    allocates its claim."""
+    if not block:
+        # pyarrow's stream decodes b"" to b"" — an Avro block is one
+        # whole zstd frame, so an empty one is corrupt
+        raise AvroLiteError("avro: empty zstandard block (corrupt container)")
+    parts = []
+    total = 0
+    try:
+        with pa.CompressedInputStream(pa.BufferReader(block), "zstd") as stream:
+            while chunk := stream.read(_ZSTD_READ_CHUNK):
+                total += len(chunk)
+                if total > _MAX_INFLATE:
+                    raise AvroLiteError(
+                        f"avro: zstandard block inflates past {_MAX_INFLATE} "
+                        "bytes — refusing a corrupt or hostile container"
+                    )
+                parts.append(chunk)
+    except (OSError, pa.ArrowException) as exc:
+        raise AvroLiteError(
+            f"avro: zstandard block failed to decode: {exc}"
+        ) from exc
+    return b"".join(parts)
 
 
 def _decompress(codec: str, block: bytes) -> bytes:
@@ -422,26 +345,31 @@ def _decompress(codec: str, block: bytes) -> bytes:
     if codec == "snappy":
         # Avro spec ("Required Codecs: snappy"): each block is the
         # snappy-compressed bytes followed by the 4-byte BIG-endian
-        # CRC32 of the UNCOMPRESSED data. pyarrow's C snappy when the
-        # build has it, else the pure-Python raw-block decoder; the
-        # CRC is verified either way.
+        # CRC32 of the UNCOMPRESSED data.
         if len(block) < 4:
             raise AvroLiteError(
                 "avro: snappy block too short for its CRC32 trailer"
             )
-        # pyarrow's C decoder needs the decompressed size up front —
-        # the snappy preamble varint carries it
         size = _snappy_preamble_length(block[:-4])
-        pac = _pa_codec("snappy") if size is not None else None
-        if pac is not None and size <= _MAX_INFLATE:
-            try:
-                out = bytes(pac.decompress(block[:-4], decompressed_size=size))
-            except Exception as exc:
-                raise AvroLiteError(
-                    f"avro: snappy block failed to decode: {exc}"
-                ) from exc
-        else:
-            out = _snappy_decompress(block[:-4])
+        if size is None:
+            raise AvroLiteError(
+                "avro: snappy preamble varint truncated or overlong "
+                "(corrupt block)"
+            )
+        if size > _MAX_INFLATE:
+            raise AvroLiteError(
+                f"avro: snappy block claims {size} uncompressed bytes "
+                f"(cap {_MAX_INFLATE}) — refusing a corrupt or hostile "
+                "container"
+            )
+        try:
+            out = pa.Codec("snappy").decompress(
+                block[:-4], decompressed_size=size, asbytes=True
+            )
+        except (OSError, pa.ArrowException) as exc:
+            raise AvroLiteError(
+                f"avro: snappy block failed to decode: {exc}"
+            ) from exc
         if zlib.crc32(out) & 0xFFFFFFFF != int.from_bytes(block[-4:], "big"):
             raise AvroLiteError(
                 "avro: snappy block CRC32 mismatch (corrupt container)"
@@ -449,31 +377,8 @@ def _decompress(codec: str, block: bytes) -> bytes:
         return out
     if codec == "zstandard":
         # Avro spec name for zstd; each block is one zstd frame (no
-        # extra trailer). pyarrow's C zstd when available, else the
-        # pure-Python RFC 8878 decoder (sources/zstd_lite.py, r14 —
-        # fuzz-pinned against both the JVM and pyarrow encoders).
-        from sclera_spark.sources.zstd_lite import (
-            ZstdError,
-            decompress,
-            frame_content_size,
-        )
-
-        # pyarrow's C decoder needs the decompressed size up front —
-        # the frame header usually declares it; headers without it
-        # take the pure-Python path (which tracks size as it decodes)
-        size = frame_content_size(block)
-        pac = _pa_codec("zstd") if size is not None else None
-        if pac is not None and size <= _MAX_INFLATE:
-            try:
-                return bytes(pac.decompress(block, decompressed_size=size))
-            except Exception as exc:
-                raise AvroLiteError(
-                    f"avro: zstandard block failed to decode: {exc}"
-                ) from exc
-        try:
-            return decompress(block, max_output=_MAX_INFLATE)
-        except ZstdError as exc:
-            raise AvroLiteError(f"avro: {exc}") from exc
+        # extra trailer)
+        return _zstd_decompress(block)
     if codec == "bzip2":
         # Avro optional codec; the block is one complete bz2 stream —
         # Python stdlib, decoded with an output ceiling (bomb guard)

@@ -10,13 +10,11 @@ Two layers, split by what they need:
 
 - ``metadata/*.metadata.json`` is PURE JSON — parsed here directly
   (version-hint resolution, current snapshot, schema, partition spec).
-- The manifest list and manifest files are Avro. ``fastavro`` is used
-  when installed; otherwise the bundled spec-complete reader
-  (sources/avro_lite.py, tested against the Apache Avro JAVA encoder
-  in the Spark distribution) decodes them — r13, closing the r12
-  verdict's "Avro layer never executed against real bytes" gap. The
-  only remaining refusal is a compression codec neither reader
-  supports (snappy/zstd without their libs), named loudly.
+- The manifest list and manifest files are Avro, decoded by the
+  bundled spec reader (sources/avro_lite.py, tested against the Apache
+  Avro JAVA encoder in the Spark distribution) for every Avro 1.12
+  codec. A corrupt container or an unknown codec refuses loudly, as
+  ``IcebergImportUnsupported``.
 
 Iceberg's identity-partitioned parquet files physically CONTAIN their
 partition columns (unlike Delta/Hive directory partitioning), so no
@@ -36,6 +34,8 @@ import json
 import os
 import re
 import urllib.parse
+
+from sclera_spark.sources import avro_lite
 
 __all__ = [
     "IcebergImportUnsupported",
@@ -305,20 +305,6 @@ def _local_path(uri: str, table_dir: str) -> str:
     return p
 
 
-def _avro_module():
-    """fastavro when installed (broader codec support: snappy/zstd),
-    else the bundled pure-Python spec reader (avro_lite: null/deflate
-    codecs; refuses others by name)."""
-    try:
-        import fastavro
-
-        return fastavro
-    except ImportError:
-        from sclera_spark.sources import avro_lite
-
-        return avro_lite
-
-
 def snapshot_data_files(doc: dict, table_dir: str) -> list[str]:
     """The CURRENT snapshot's live parquet data files (local paths),
     by replaying manifest-list → manifests per the public spec.
@@ -357,14 +343,13 @@ def snapshot_files(
             "Iceberg table has no current snapshot (no data committed); "
             "nothing to import"
         )
-    avro = _avro_module()
 
     def read_avro(path: str):
         with open(path, "rb") as fh:
             try:
-                yield from avro.reader(fh)
+                yield from avro_lite.reader(fh)
             except ValueError as exc:
-                # avro_lite's unsupported-codec (or corrupt-container)
+                # avro_lite's unknown-codec (or corrupt-container)
                 # refusal, surfaced on the import's own error type
                 raise IcebergImportUnsupported(
                     f"Iceberg import: cannot decode {path!r}: {exc}"

@@ -844,8 +844,8 @@ class ManifestTable:
         """Migration from an external APACHE ICEBERG table without
         copying data: resolve the current snapshot per the public spec
         (sources/iceberg.py — metadata.json is parsed directly; the
-        Avro manifest layer reads via fastavro when installed, else the
-        bundled spec reader sources/avro_lite.py), hard-link its live
+        Avro manifest layer reads through the bundled spec reader
+        sources/avro_lite.py), hard-link its live
         parquet files in, and publish them as version 1 of a new
         manifest table.
 

@@ -1,5 +1,5 @@
-"""sources/avro_lite.py — the bundled pure-Python Avro Object Container
-File reader. Two oracle layers:
+"""sources/avro_lite.py — the bundled Avro Object Container File
+reader. Oracle layers:
 
 - spec vectors: the zig-zag varint examples printed in the Avro
   specification itself (https://avro.apache.org/docs/1.12.0/specification/
@@ -9,13 +9,20 @@ File reader. Two oracle layers:
   independent canonical ENCODER writes container files (all primitive
   types, unions, enums, arrays, maps, nested records, null + deflate
   codecs) that avro_lite must decode value-exactly.
+- the JVM's zstd-jni encoder (native libzstd in the Spark
+  distribution) at every compression level, for the ``zstandard``
+  codec layer, plus hostile frames that must refuse as AvroLiteError.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import random
+import struct
+import zlib
 
+import pyarrow as pa
 import pytest
 
 from sclera_spark.sources import avro_lite
@@ -207,9 +214,9 @@ def test_vendored_fixture_bytes_decode(tmp_path):
         os.path.join(fixdir, "manifest_list_deletes.avro")
     )
     assert dele[0]["content"] == 1
-    # r14: snappy DECODES (pure-Python raw-block decoder, CRC32
-    # verified) — snappy-java's bytes are the canonical vector; the
-    # snappy list must yield the identical records as the null-codec one
+    # snappy DECODES (CRC32 verified) — snappy-java's bytes are the
+    # canonical vector; the snappy list must yield the identical
+    # records as the null-codec one
     snap = avro_lite.read_file(
         os.path.join(fixdir, "manifest_list_snappy.avro")
     )
@@ -225,9 +232,10 @@ def test_vendored_fixture_bytes_decode(tmp_path):
         os.path.join(fixdir, "manifest_list_allsnappy.avro")
     )
     assert [r["manifest_path"] for r in allsnap] == ["metadata/m1_snappy.avro"]
-    # r14: the FULL Avro 1.12 codec matrix decodes — zstd (pyarrow or
-    # the pure-Python RFC 8878 decoder), bzip2 and xz (stdlib); the
-    # Java-encoder bytes are the canonical vectors for each
+    # the FULL Avro 1.12 codec matrix decodes — zstd (Avro Java's
+    # codec writes frames with no content size, so this is the
+    # streamed libzstd path), bzip2 and xz (stdlib); the Java-encoder
+    # bytes are the canonical vectors for each
     for name in (
         "manifest_list_zstd.avro",
         "manifest_list_bzip2.avro",
@@ -235,16 +243,6 @@ def test_vendored_fixture_bytes_decode(tmp_path):
     ):
         got = avro_lite.read_file(os.path.join(fixdir, name))
         assert got == mlist, name
-    # ...including zstd through the pure-Python fallback path
-    orig = avro_lite._pa_codec
-    avro_lite._pa_codec = lambda _n: None
-    try:
-        got = avro_lite.read_file(
-            os.path.join(fixdir, "manifest_list_zstd.avro")
-        )
-        assert got == mlist
-    finally:
-        avro_lite._pa_codec = orig
     # an UNKNOWN codec name stays a loud refusal
     with pytest.raises(AvroLiteError, match="lz4hc"):
         avro_lite.reader(
@@ -286,53 +284,185 @@ def _unknown_codec_container() -> bytes:
     return b"Obj\x01" + meta + sync + block
 
 
+def _crc(data: bytes) -> bytes:
+    return struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
+
+
 def test_snappy_hostile_input_refuses():
-    """The snappy decoder refuses corrupt/hostile blocks loudly:
-    CRC mismatch, out-of-range copy offsets, truncated literals,
-    preamble/output length mismatch, and length-bomb preambles — and
-    round-trips overlapping-copy (RLE) encodings correctly."""
-    import struct
-    import zlib as _zlib
-
-    from sclera_spark.sources.avro_lite import (
-        AvroLiteError,
-        _decompress,
-        _snappy_decompress,
-    )
-
+    """The snappy codec refuses corrupt/hostile blocks loudly: CRC
+    mismatch, out-of-range copy offsets, truncated literals,
+    preamble/output length mismatch, and length-bomb or overlong
+    preambles — and round-trips overlapping-copy (RLE) encodings."""
     # hand-built valid block: literal 'abcd' + overlapping copy
     # (offset 2, len 6) -> abcd + cdcdcd (byte-wise RLE semantics)
     body = bytes([10]) + b"\x0c" + b"abcd" + bytes([(2 << 2) | 1, 2])
-    assert _snappy_decompress(body) == b"abcdcdcdcd"
-    # through the Avro codec layer: CRC verified
-    crc = struct.pack(">I", _zlib.crc32(b"abcdcdcdcd") & 0xFFFFFFFF)
-    assert _decompress("snappy", body + crc) == b"abcdcdcdcd"
+    assert avro_lite._decompress("snappy", body + _crc(b"abcdcdcdcd")) == (
+        b"abcdcdcdcd"
+    )
     with pytest.raises(AvroLiteError, match="CRC32"):
-        _decompress("snappy", body + b"\x00\x00\x00\x00")
+        avro_lite._decompress("snappy", body + b"\x00\x00\x00\x00")
     with pytest.raises(AvroLiteError, match="trailer"):
-        _decompress("snappy", b"\x01\x00")
-    # copy offset past the produced output
-    with pytest.raises(AvroLiteError, match="offset out of range"):
-        _snappy_decompress(bytes([6]) + b"\x04ab" + bytes([(3 << 2) | 1, 9]))
-    # zero offset
-    with pytest.raises(AvroLiteError, match="offset out of range"):
-        _snappy_decompress(bytes([6]) + b"\x04ab" + bytes([(3 << 2) | 1, 0]))
-    # truncated literal
-    with pytest.raises(AvroLiteError, match="literal truncated"):
-        _snappy_decompress(bytes([4]) + b"\x0cab")
-    # output shorter than preamble claims
-    with pytest.raises(AvroLiteError, match="preamble claims"):
-        _snappy_decompress(bytes([9]) + b"\x0c" + b"abcd")
-    # output exceeding preamble
-    with pytest.raises(AvroLiteError, match="exceeds"):
-        _snappy_decompress(bytes([2]) + b"\x0c" + b"abcd")
-    # length-bomb preamble refuses before allocating
-    bomb = b"\xff\xff\xff\xff\x0f"  # ~4 GiB claim
+        avro_lite._decompress("snappy", b"\x01\x00")
+    for corrupt in (
+        # copy offset past the produced output
+        bytes([6]) + b"\x04ab" + bytes([(3 << 2) | 1, 9]),
+        # zero offset
+        bytes([6]) + b"\x04ab" + bytes([(3 << 2) | 1, 0]),
+        # truncated literal
+        bytes([4]) + b"\x0cab",
+        # output shorter than the preamble claims
+        bytes([9]) + b"\x0c" + b"abcd",
+        # output exceeding the preamble
+        bytes([2]) + b"\x0c" + b"abcd",
+    ):
+        with pytest.raises(AvroLiteError, match="failed to decode"):
+            avro_lite._decompress("snappy", corrupt + _crc(b""))
+    # length-bomb preamble (~4 GiB claim) refuses before allocating
     with pytest.raises(AvroLiteError, match="cap"):
-        _snappy_decompress(bomb)
-    # overlong varint
-    with pytest.raises(AvroLiteError, match="overlong"):
-        _snappy_decompress(b"\x80\x80\x80\x80\x80\x80\x01")
+        avro_lite._decompress("snappy", b"\xff\xff\xff\xff\x0f" + _crc(b""))
+    # overlong (and truncated) preamble varints
+    for pre in (b"\x80\x80\x80\x80\x80\x80\x01", b"\x80", b""):
+        with pytest.raises(AvroLiteError, match="overlong"):
+            avro_lite._decompress("snappy", pre + _crc(b""))
+
+
+def _payloads(seed: int, n_trials: int):
+    rng = random.Random(seed)
+    for trial in range(n_trials):
+        kind = trial % 6
+        n = rng.choice([0, 1, 5, 100, 1000, 20000, 300000])
+        if kind == 0:
+            data = bytes(rng.randrange(256) for _ in range(min(n, 5000)))
+        elif kind == 1:
+            data = (
+                b"hello world, this is a repetitive corpus line. "
+                * (n // 40 + 1)
+            )[:n]
+        elif kind == 2:
+            data = bytes(rng.randrange(4) for _ in range(n))
+        elif kind == 3:
+            words = [b"alpha", b"beta", b"gamma", b"delta12345", b"x"]
+            data = b" ".join(
+                rng.choice(words) for _ in range(n // 4 + 1)
+            )[:n]
+        elif kind == 4:
+            data = bytes([trial % 256]) * n
+        else:
+            base = bytes(rng.randrange(256) for _ in range(50))
+            data = (base * (n // 50 + 1))[:n]
+        yield trial, data
+
+
+def _unsized_zstd_frame(data: bytes) -> bytes:
+    """A streamed zstd frame: like Avro Java's zstandard codec, the
+    header carries no content size."""
+    sink = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(sink, "zstd") as out:
+        out.write(data)
+    return sink.getvalue().to_pybytes()
+
+
+def test_zstd_fuzz_vs_jvm_all_levels(spark):
+    """zstd-jni (native libzstd in the Spark distribution) at every
+    level 1-22 — high levels emit FSE_Compressed sequence tables and
+    4-stream Huffman literals, low levels predefined tables and RLE."""
+    Z = spark.sparkContext._jvm.com.github.luben.zstd.Zstd
+    for trial, data in _payloads(11, 132):
+        level = 1 + trial % 22
+        comp = bytes(Z.compress(bytearray(data), level))
+        got = avro_lite._decompress("zstandard", comp)
+        assert got == data, f"trial {trial} level {level}"
+
+
+def test_zstd_frame_without_content_size():
+    """A frame whose header declares no content size decodes through
+    the stream, across several read chunks."""
+    data = b"streamed zstd payload " * 150_000  # ~3.3 MB
+    frame = _unsized_zstd_frame(data)
+    assert frame[4] == 0x00  # Frame_Header_Descriptor: no FCS field
+    assert avro_lite._decompress("zstandard", frame) == data
+
+
+def test_zstd_skippable_and_concatenated_frames():
+    zc = pa.Codec("zstd")
+    comp = zc.compress(b"actual content", asbytes=True)
+    skip = (
+        (0x184D2A53).to_bytes(4, "little")
+        + (7).to_bytes(4, "little")
+        + b"x" * 7
+    )
+    assert avro_lite._decompress("zstandard", skip + comp) == b"actual content"
+    assert avro_lite._decompress("zstandard", comp + comp) == (
+        b"actual content" * 2
+    )
+    with pytest.raises(AvroLiteError, match="truncated|Truncated"):
+        avro_lite._decompress("zstandard", skip[:6])
+
+
+def test_zstd_checksummed_frame(spark):
+    """zstd-jni can emit the optional XXH64 content checksum: the
+    happy path decodes, a flipped checksum bit refuses."""
+    jvm = spark.sparkContext._jvm
+    try:
+        ctx = jvm.com.github.luben.zstd.ZstdCompressCtx()
+        ctx.setChecksum(True)
+        ctx.setLevel(3)
+        comp = bytes(ctx.compress(bytearray(b"checksummed content " * 50)))
+    except Exception:
+        pytest.skip("zstd-jni ZstdCompressCtx unavailable")
+    assert comp[4] & 0x04  # checksum flag actually set
+    assert avro_lite._decompress("zstandard", comp) == (
+        b"checksummed content " * 50
+    )
+    bad = bytearray(comp)
+    bad[-1] ^= 0x01  # flip a checksum bit
+    with pytest.raises(AvroLiteError, match="zstandard"):
+        avro_lite._decompress("zstandard", bytes(bad))
+
+
+def test_zstd_hostile_inputs_refuse():
+    """Every malformed frame refuses as AvroLiteError, never as a bare
+    pyarrow OSError."""
+    zc = pa.Codec("zstd")
+    good = zc.compress(b"payload payload payload", asbytes=True)
+    # pyarrow's stream decodes b"" to b"": the codec layer must not
+    with pytest.raises(AvroLiteError, match="empty"):
+        avro_lite._decompress("zstandard", b"")
+    bad = bytearray(good)
+    bad[-3] ^= 0xFF  # a corrupt content byte inside the block
+    # dictionary-id frame: Dictionary_ID_flag = 1, dict id 7 inserted
+    # before the window/FCS fields
+    dict_frame = bytearray(good)
+    dict_frame[4] |= 0x01
+    dict_frame.insert(5, 7)
+    for corrupt in (
+        b"\x00\x00\x00\x00" + good[4:],  # bad magic
+        good[:5],  # truncated header
+        good[:-2],  # truncated tail
+        bytes(bad),
+        bytes(dict_frame),
+        good + b"xyz",  # trailing garbage after the frame
+    ):
+        with pytest.raises(AvroLiteError, match="zstandard"):
+            avro_lite._decompress("zstandard", corrupt)
+
+
+def test_zstd_bomb_refuses_at_inflate_cap(monkeypatch):
+    """Output past the inflate cap refuses while streaming: the frame
+    declares no size, so the cap is checked chunk by chunk."""
+    monkeypatch.setattr(avro_lite, "_MAX_INFLATE", 3 << 20)
+    at_cap = b"\x00" * (3 << 20)
+    assert avro_lite._decompress("zstandard", _unsized_zstd_frame(at_cap)) == (
+        at_cap
+    )
+    with pytest.raises(AvroLiteError, match="inflates past"):
+        avro_lite._decompress(
+            "zstandard", _unsized_zstd_frame(at_cap + b"\x00")
+        )
+    # a frame that DOES declare its size refuses the same way
+    sized = pa.Codec("zstd").compress(b"\x00" * (5 << 20), asbytes=True)
+    with pytest.raises(AvroLiteError, match="inflates past"):
+        avro_lite._decompress("zstandard", sized)
 
 
 def test_hostile_counts_and_sizes_refuse():

@@ -1,7 +1,7 @@
 """CREATE TABLE ... FROM ICEBERG (sources/iceberg.py): the JSON
 metadata layer is fully testable here; the Avro manifest layer reads
-via fastavro when installed, else the bundled pure-Python spec reader
-(sources/avro_lite.py — r13). The vendored fixtures under
+through the bundled spec reader (sources/avro_lite.py). The vendored
+fixtures under
 tests/fixtures/iceberg_avro/ are GENUINE Avro bytes written by the
 Apache Avro JAVA library (tools/gen_iceberg_avro_fixture.py), so the
 full import path executes here against real encoding with no
@@ -22,9 +22,9 @@ try:
 
     HAVE_FASTAVRO = True
 except ImportError:
-    # searched: fastavro and avro are not installed in this container
-    # and there is no network to fetch them; the import path below is
-    # exercised end-to-end wherever fastavro exists
+    # fastavro is only an independent ENCODER for
+    # test_full_iceberg_import_end_to_end; the import itself always
+    # decodes through avro_lite
     HAVE_FASTAVRO = False
 
 
@@ -198,15 +198,12 @@ def test_vendored_real_avro_delete_manifest_refuses(spark, tmp_path):
         ManifestTable.import_iceberg(t, str(tmp_path / "imp"))
 
 
-@pytest.mark.skipif(
-    HAVE_FASTAVRO, reason="fastavro raises its own unknown-codec error"
-)
 def test_unsupported_codec_refuses_by_name(spark, tmp_path):
     """avro_lite refuses an UNKNOWN-codec container LOUDLY, naming the
     codec — never silently skipping the manifest. (The full Avro 1.12
-    codec matrix — snappy/zstandard/bzip2/xz — decodes as of r14, so
-    the refusal vector is a hand-built container naming a codec that
-    does not exist.)"""
+    codec matrix — snappy/zstandard/bzip2/xz — decodes, so the refusal
+    vector is a hand-built container naming a codec that does not
+    exist.)"""
     from tests.test_avro_lite import _unknown_codec_container
 
     t = _stage_fixture_table(tmp_path, spark)
@@ -453,7 +450,8 @@ def test_vendored_real_avro_full_snappy_import(spark, tmp_path):
     ]
 
 
-# ---- full import: runs wherever fastavro is installed ----
+# ---- full import: runs wherever fastavro is installed, as an
+# encoder independent of the avro_lite decoder ----
 
 _MANIFEST_LIST_SCHEMA = {
     "type": "record",
@@ -562,9 +560,6 @@ def test_full_iceberg_import_end_to_end(spark, tmp_path):
     assert os.stat(os.path.join(dest, "data", "f1.parquet")).st_nlink >= 2
 
 
-@pytest.mark.skipif(
-    HAVE_FASTAVRO, reason="fastavro raises its own unknown-codec error"
-)
 def test_ddl_surface_routes_and_refuses_loudly(spark, tmp_path):
     """The statement parses, resolves the JSON + Avro layers, and
     surfaces the codec refusal verbatim — and no half-registered table
@@ -586,29 +581,25 @@ def test_ddl_surface_routes_and_refuses_loudly(spark, tmp_path):
 
 # ---- fake-codec replay coverage (r12) ----
 #
-# The container has no fastavro, which used to leave snapshot_data_files'
-# REPLAY LOGIC (manifest-list -> manifests -> data files, every refusal
-# branch) with zero executed coverage here. These tests swap in a
-# JSON-lines stand-in for the Avro container layer: fixture files hold
-# one JSON record per line with exactly the record shapes fastavro
-# yields, so the production replay code runs verbatim; only the byte
-# decoding is faked. Real-Avro environments additionally run
-# test_full_iceberg_import_end_to_end on genuine fastavro bytes.
+# snapshot_data_files' REPLAY LOGIC (manifest-list -> manifests -> data
+# files, every refusal branch) is exercised with hand-written records.
+# These tests swap in a JSON-lines stand-in for avro_lite.reader:
+# fixture files hold one JSON record per line with exactly the record
+# shapes the Avro reader yields, so the production replay code runs
+# verbatim; only the byte decoding is faked.
 
 
-class _FakeFastavro:
-    @staticmethod
-    def reader(fh):
-        for line in fh.read().decode().splitlines():
-            if line.strip():
-                yield json.loads(line)
+def _json_lines_reader(fh):
+    for line in fh.read().decode().splitlines():
+        if line.strip():
+            yield json.loads(line)
 
 
 @pytest.fixture
 def fake_avro(monkeypatch):
-    import sys
+    from sclera_spark.sources import avro_lite
 
-    monkeypatch.setitem(sys.modules, "fastavro", _FakeFastavro())
+    monkeypatch.setattr(avro_lite, "reader", _json_lines_reader)
 
 
 def _jl(path, records):

@@ -246,8 +246,8 @@ def main() -> None:
         MANIFEST_LIST_SCHEMA,
         [mlist_rec("metadata/m1.avro", content=1)],
     )
-    # a snappy-coded list (r14: avro_lite now DECODES snappy via the
-    # pure-Python raw-block decoder; snappy-java's bytes are the
+    # a snappy-coded list (avro_lite DECODES snappy via pyarrow's
+    # bundled snappy, CRC32-verified; snappy-java's bytes are the
     # canonical test vector)
     write_avro(
         "manifest_list_snappy.avro",
@@ -345,8 +345,8 @@ def main() -> None:
             mlist_rec("metadata/d3.avro", content=1),
         ],
     )
-    # r14: zstd DECODES too (pyarrow's bundled zstd, or the pure-Python
-    # RFC 8878 decoder in sources/zstd_lite.py); the zstd-jni bytes are
+    # zstd DECODES too (pyarrow's bundled libzstd, streamed: zstd-jni
+    # writes frames without a content size); the zstd-jni bytes are
     # the canonical vector
     write_avro(
         "manifest_list_zstd.avro",
